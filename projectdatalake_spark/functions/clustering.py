@@ -6,8 +6,8 @@ window), interleave the rank bits into one Z-value, and range-partition
 on it. Every output file then covers a small hyper-rectangle of the key
 space, so write-time min/max stats are tight on EVERY clustered column
 at once — the public Z-ordering design Delta and Iceberg document.
-Used by txlog OPTIMIZE (zorder_by), Delta OPTIMIZE ZORDER BY, and
-available to Iceberg rewrites.
+Used by ``sources.write_path.range_layout``, which lays out txlog
+OPTIMIZE (zorder_by), Delta OPTIMIZE ZORDER BY and Iceberg rewrites.
 
 Hilbert ordering (2-D): same quantile binning, but the bin ranks map
 to a Hilbert space-filling curve index instead of bit interleaving.

@@ -48,9 +48,14 @@ _live_cache: list[DataFrame] = []
 
 
 def release_cache() -> None:
-    """Unpersist every curation prefix still cached by :func:`curate`."""
+    """Unpersist every curation prefix still cached by :func:`curate`.
+    A frame whose SparkContext has stopped (a session restart in the
+    same process) holds no cache any more and is only dropped: calling
+    ``unpersist`` on it raises."""
     while _live_cache:
-        _live_cache.pop().unpersist()
+        df = _live_cache.pop()
+        if df.sparkSession.sparkContext._jsc is not None:
+            df.unpersist()
 
 
 def _bucket(id_col: Column) -> Column:

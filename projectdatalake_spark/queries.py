@@ -8585,8 +8585,10 @@ def iceberg_orphan_cleanup(spark: SparkSession, sf_dir: str) -> DataFrame:
     expire (history), vacuum-equivalents (past-horizon files), orphans
     (never-committed files)."""
     import tempfile
+    import uuid
 
     from projectdatalake_spark.sources.iceberg_interop import IcebergTable
+    from projectdatalake_spark.sources.write_path import write_files
 
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus",
@@ -8595,7 +8597,7 @@ def iceberg_orphan_cleanup(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = tempfile.mkdtemp(prefix="ice_orphan_") + "/t"
     t = IcebergTable.create(spark, root, o.repartition(4))
     # a crashed writer: data staged, commit never happened
-    t._stage_data(o.limit(100), (), None)
+    write_files(spark, o.limit(100), f"{root}/data/{uuid.uuid4().hex}")
     assert t.remove_orphan_files(older_than_ms=None) > 0
     return (
         t.snapshot()
@@ -15509,8 +15511,11 @@ def ts_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("slope").alias("lo"), F.max("slope").alias("hi")
     ).collect()[0]
     lo, hi = rng["lo"], rng["hi"]
-    if lo is None or lo == hi:
-        # 0/1 distinct slope value: the median IS that value
+    if lo is None:
+        # no slope pairs (≤ 1 distinct day): no median rank to select
+        return spark.createDataFrame([], "n_pairs long, sen_slope double")
+    if lo == hi:
+        # one distinct slope value: the median IS that value
         n = slopes.count()
         return spark.range(1).select(
             F.lit(n).cast("long").alias("n_pairs"),

@@ -41,7 +41,6 @@ lakehouse semantics.
 
 from __future__ import annotations
 
-import contextlib
 import json
 import re
 import time
@@ -52,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
 from projectdatalake_spark.sources import atomic as _atomic
+from projectdatalake_spark.sources import write_path as _write_path
 
 _LOG = "_delta_log"
 _LAST_CHECKPOINT = "_last_checkpoint"
@@ -154,6 +154,16 @@ def _unquote_path(p: str) -> str:
     return urllib.parse.unquote(p)
 
 
+def _partition_values(partition: dict[str, str]) -> dict:
+    """Hive directory segments → Delta partitionValues (unescaped; the
+    hive null directory is a JSON null)."""
+    pv = {k: _unquote_path(v) for k, v in partition.items()}
+    return {
+        k: (None if v == "__HIVE_DEFAULT_PARTITION__" else v)
+        for k, v in pv.items()
+    }
+
+
 def _file_path_raw(col):
     """``_metadata.file_path`` as a RAW filesystem path (executor-side
     expression): strip the scheme, then percent-decode — the URI form is
@@ -168,29 +178,6 @@ def _file_path_raw(col):
             F.regexp_replace(col, "^file:", ""), r"\+", "%2B"
         )
     )
-
-
-@contextlib.contextmanager
-def _scoped_confs(spark: SparkSession, confs: dict):
-    """Set session confs for the duration of a block, restoring the
-    prior EFFECTIVE values on exit. The parquet field-id confs are
-    consulted by Spark at ACTION time, not at plan-construction time,
-    so the block must enclose the action (write/collect) — and a conf
-    set without restore would leak id-based parquet resolution
-    semantics into every later read/write on the shared session
-    (ADVICE r11, delta_interop fieldId leak)."""
-    saved = []
-    for k, v in confs.items():
-        saved.append((k, spark.conf.get(k, None)))
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, prior in saved:
-            if prior is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, prior)
 
 
 def _decimal_params_d(t: str) -> tuple[int, int] | None:
@@ -224,7 +211,7 @@ def _bloom_prune_merge(spark, cand, key_frame, bcols, schema):
     — O(#candidates × #keys), both driver-bounded."""
     import numpy as np
 
-    from .txlog import _BLOOM_M, _BLOOM_SEEDS
+    from .write_path import _BLOOM_M, _BLOOM_SEEDS
 
     types = {f.name: f.dataType.simpleString() for f in schema.fields}
     for c in bcols:
@@ -1660,95 +1647,59 @@ class DeltaTable:
         }
 
     def _stage(self, df: DataFrame, partition_by: tuple[str, ...]) -> list[dict]:
-        """Write data files under _staging, move them into the table root
-        (hive layout — Delta convention: partition columns live in the
-        directory structure / partitionValues, NOT in the files), and
-        return spec-shaped add actions with Delta-format stats collected in
-        ONE Spark pass."""
-        stage_id = uuid.uuid4().hex
-        stage_dir = f"{self.root}/_staging/{stage_id}"
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        # id-mode staged frames carry parquet.field.id field metadata
-        # (_physical_stage); the write conf that makes Spark stamp those
-        # ids into the files is scoped to THIS action only — it is
-        # consulted at write time, so enclosing the action suffices and
-        # nothing leaks into later session reads/writes (ADVICE r11)
-        field_ids = any(
-            (f.metadata or {}).get("parquet.field.id") is not None
-            for f in df.schema.fields
+        """Write data files through the shared staged write path into the
+        table root (hive layout — Delta convention: partition columns live
+        in the directory structure / partitionValues, NOT in the files)
+        and return spec-shaped add actions with Delta-format stats.
+        id-mode staged frames carry parquet.field.id field metadata
+        (_physical_stage), which the write path stamps into the files."""
+        files = _write_path.write_files(
+            self.spark,
+            df,
+            f"{self.root}/_staging/{uuid.uuid4().hex}",
+            dest_root=self.root,
+            partition_by=partition_by,
+            types=_SIMPLE_TYPES,
+            bloom_cols=self._bloom_cols(),
+            nulls=True,
         )
-        if field_ids:
-            with _scoped_confs(
-                self.spark,
-                {"spark.sql.parquet.fieldId.write.enabled": "true"},
-            ):
-                writer.parquet(stage_dir)
-        else:
-            writer.parquet(stage_dir)
-        def _pv_of(rel: str) -> dict:
-            pv = {
-                seg.split("=", 1)[0]: _unquote_path(seg.split("=", 1)[1])
-                for seg in rel.split("/")[:-1]
-                if "=" in seg
-            }
-            return {
-                k: (None if v == "__HIVE_DEFAULT_PARTITION__" else v)
-                for k, v in pv.items()
-            }
+        return [
+            self._add_action(f, _partition_values(f.partition)) for f in files
+        ]
 
-        adds = []
-        if _atomic.is_local_path(self.root):
-            # local fast path (r13): one py4j roundtrip per file for the
-            # listing + three per rename were pure driver time on every
-            # commit (guide §5; cProfile in OPTIMIZATION_r13.md)
-            stage_uri = _atomic.strip_file_scheme(stage_dir)
-            root_uri = _atomic.strip_file_scheme(self.root)
-            for p, size, mtime in _atomic.list_local_files(stage_uri):
-                rel = p[len(stage_uri):].lstrip("/")
-                _atomic.move_local_file(p, f"{root_uri}/{rel}")
-                adds.append(
-                    {
-                        "path": _quote_path(rel),
-                        "partitionValues": _pv_of(rel),
-                        "size": size,
-                        "modificationTime": mtime,
-                        "dataChange": True,
-                    }
-                )
-            _atomic.delete_local_tree(stage_uri)
-        else:
-            fs = self._fs()
-            stage_path = self._path(stage_dir)
-            staged = []
-            it = fs.listFiles(stage_path, True)
-            while it.hasNext():
-                status = it.next()
-                p = status.getPath()
-                if p.getName().endswith(".parquet"):
-                    staged.append(
-                        (p, status.getLen(), status.getModificationTime())
-                    )
-            stage_uri = stage_path.toUri().getPath()
-            for p, size, mtime in staged:
-                rel = p.toUri().getPath()[len(stage_uri):].lstrip("/")
-                dest = self._path(f"{self.root}/{rel}")
-                fs.mkdirs(dest.getParent())
-                if not fs.rename(p, dest):
-                    raise IOError(f"failed to move staged file {p} -> {dest}")
-                adds.append(
-                    {
-                        "path": _quote_path(rel),
-                        "partitionValues": _pv_of(rel),
-                        "size": size,
-                        "modificationTime": mtime,
-                        "dataChange": True,
-                    }
-                )
-            fs.delete(stage_path, True)
-        self._attach_stats(adds, set(partition_by))
-        return adds
+    @staticmethod
+    def _add_action(f, partition_values: dict) -> dict:
+        """Spec-shaped add action of one written file: numRecords /
+        minValues / maxValues / nullCount stats JSON, bloom hex in tags."""
+        add = {
+            "path": _quote_path(f.rel),
+            "partitionValues": partition_values,
+            "size": f.size,
+            "modificationTime": f.mtime,
+            "dataChange": True,
+        }
+        if not f.nrec:
+            return add  # an empty file records no stats
+        stats = {
+            "numRecords": f.nrec,
+            "minValues": {
+                c: _stats_scalar(mn)
+                for c, (mn, _mx, _n) in f.stats.items()
+                if mn is not None
+            },
+            "maxValues": {
+                c: _stats_scalar(mx)
+                for c, (_mn, mx, _n) in f.stats.items()
+                if mx is not None
+            },
+            "nullCount": {c: n for c, (_mn, _mx, n) in f.stats.items()},
+        }
+        add["stats"] = json.dumps(stats, separators=(",", ":"))
+        if f.bloom:
+            add["tags"] = {
+                f"{_BLOOM_TAG_PREFIX}{c}": h for c, h in f.bloom.items()
+            }
+        return add
 
     @staticmethod
     def _bloom_cols_of(meta: dict) -> tuple[str, ...]:
@@ -1762,139 +1713,6 @@ class DeltaTable:
         if not self.exists():
             return tuple(getattr(self, "_pending_bloom", ()))
         return self._bloom_cols_of(self._state()["metaData"])
-
-    def _attach_stats(self, adds: list[dict], pcols: set) -> None:
-        """Delta-format per-file stats (numRecords / minValues / maxValues /
-        nullCount). Derived from the parquet FOOTERS instead of a full
-        Spark re-read of the data just written (guide §6; OPTIMIZATION_r13
-        lever #1) — per-type bitwise exactness is probed and pinned in
-        sources/footer_stats.py + tests/test_footer_stats.py. Columns the
-        footer cannot reproduce exactly (INT96 ltz timestamps, unexpected
-        missing stats) and every ``bloom_by`` column (per-file bloom hex in
-        add.tags needs Spark-xxhash64 parity, txlog's bit layout) run
-        through the original Spark aggregate RESTRICTED to those columns."""
-        if not adds:
-            return
-        from . import footer_stats as _fs
-
-        add_paths = [
-            _atomic.strip_file_scheme(self._abs_data_path(a["path"]))
-            for a in adds
-        ]
-        schema = _fs.arrow_schema_of(add_paths[0])
-        # same filter the old read-back-schema walk applied
-        cols = [
-            fld.name
-            for fld in schema
-            if fld.name not in pcols
-            and _fs.spark_type_name(fld.type) in _SIMPLE_TYPES
-        ]
-        bloom_cols = [c for c in self._bloom_cols() if c in set(cols)]
-        per_file = _fs.footer_file_stats(
-            self.spark, add_paths, want_cols=cols, with_nulls=True
-        )
-        untrusted: list[str] = []
-        for st in per_file.values():
-            untrusted += [c for c in st["untrusted"] if c not in untrusted]
-        spark_by_path, spark_blooms = (
-            self._attach_stats_spark(adds, untrusted, bloom_cols)
-            if untrusted or bloom_cols
-            else ({}, {})
-        )
-        for a, p in zip(adds, add_paths):
-            st = per_file.get(p)
-            if st is None or st["nrec"] == 0:
-                continue  # empty file: the old read-back attached nothing
-            fallback = spark_by_path.get(p) or {}
-            stats = {
-                "numRecords": st["nrec"],
-                "minValues": {},
-                "maxValues": {},
-                "nullCount": {},
-            }
-            for c in cols:
-                if c in st["untrusted"]:
-                    fb = fallback.get(c)
-                    if fb is None:
-                        continue
-                    mn, mx, nulls = fb
-                    if mn is not None:
-                        stats["minValues"][c] = _stats_scalar(mn)
-                    if mx is not None:
-                        stats["maxValues"][c] = _stats_scalar(mx)
-                    stats["nullCount"][c] = nulls
-                    continue
-                mn, mx = st["min"].get(c), st["max"].get(c)
-                if mn is not None:
-                    stats["minValues"][c] = _stats_scalar(mn)
-                if mx is not None:
-                    stats["maxValues"][c] = _stats_scalar(mx)
-                stats["nullCount"][c] = st["nulls"].get(c, 0)
-            a["stats"] = json.dumps(stats, separators=(",", ":"))
-            blooms = spark_blooms.get(p)
-            if blooms:
-                a.setdefault("tags", {}).update(
-                    {f"{_BLOOM_TAG_PREFIX}{c}": h for c, h in blooms.items()}
-                )
-
-    def _attach_stats_spark(
-        self, adds: list[dict], cols: list[str], bloom_cols: list[str]
-    ) -> tuple[dict, dict]:
-        """The original one-Spark-pass grouped stats aggregate, now the
-        RESTRICTED fallback for footer-untrusted and bloom columns.
-        Returns ({path: {col: (min, max, nulls)}}, {path: {col: hex}})."""
-        from .txlog import _BLOOM_M, _BLOOM_SEEDS
-
-        paths = [self._abs_data_path(a["path"]) for a in adds]
-        df = self.spark.read.option("basePath", self.root).parquet(*paths)
-        present = set(df.columns)
-        cols = [c for c in cols if c in present]
-        bloom_cols = [c for c in bloom_cols if c in present]
-        aggs = [F.count(F.lit(1)).alias("__n")]
-        for c in cols:
-            aggs.append(F.min(c).alias(f"min__{c}"))
-            aggs.append(F.max(c).alias(f"max__{c}"))
-            aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"nulls__{c}"))
-        for c in bloom_cols:
-            for i, seed in enumerate(_BLOOM_SEEDS):
-                aggs.append(
-                    F.collect_set(
-                        F.pmod(F.xxhash64(F.col(c), F.lit(seed)), F.lit(_BLOOM_M))
-                    ).alias(f"bloom{i}__{c}")
-                )
-        rows = (
-            df.withColumn("__file", F.input_file_name())
-            .groupBy("__file")
-            .agg(*aggs)
-            .collect()
-        )
-        # keyed by FULL PATH, never basename: partitioned writes reuse
-        # part-file basenames across partition dirs, and basename keying
-        # attributes one file's stats to its same-named siblings → WRONG
-        # min/max skipping (dropped rows, not conservatism)
-        # decode the input_file_name URI side ONLY (percent-encoded
-        # partition values would never match raw listing paths — stats
-        # silently lost for e.g. 'priority=4-NOT SPECIFIED' dirs); the
-        # filesystem side gets a plain scheme strip, never a decode
-        by_path: dict[str, dict] = {}
-        blooms_by_path: dict[str, dict] = {}
-        for r in rows:
-            d = r.asDict()
-            fpath = _atomic.uri_to_path(d.pop("__file"))
-            by_path[fpath] = {
-                c: (d[f"min__{c}"], d[f"max__{c}"], d[f"nulls__{c}"] or 0)
-                for c in cols
-            }
-            blooms = {}
-            for c in bloom_cols:
-                bits = 0
-                for i in range(len(_BLOOM_SEEDS)):
-                    for p in d.get(f"bloom{i}__{c}") or []:
-                        bits |= 1 << p
-                if bits:
-                    blooms[c] = f"{bits:x}"
-            blooms_by_path[fpath] = blooms
-        return by_path, blooms_by_path
 
     def _ict_prev(self, version: int) -> tuple[bool, int | None]:
         """(was ICT active at ``version - 1``, that commit's authoritative
@@ -3409,25 +3227,8 @@ class DeltaTable:
             for col, sval in key:
                 df = df.withColumn(col, _partition_literal(sval, ptypes[col]))
             if zorder_by:
-                from projectdatalake_spark.functions.clustering import (
-                    attach_hilbert_column,
-                    zorder_column,
-                )
-
-                if curve == "hilbert":
-                    # the liquid-clustering curve: contiguous, so range
-                    # slices cover tighter rectangles than Z (2-D only)
-                    staged = attach_hilbert_column(df, tuple(zorder_by), "__z")
-                elif curve == "z":
-                    staged = df.withColumn(
-                        "__z", zorder_column(df, tuple(zorder_by))
-                    )
-                else:
-                    raise ValueError(f"unknown clustering curve: {curve!r}")
-                compacted = (
-                    staged.repartitionByRange(target_files, "__z")
-                    .sortWithinPartitions("__z")
-                    .drop("__z")
+                compacted = _write_path.range_layout(
+                    df, target_files, zorder_by=zorder_by, curve=curve
                 )
             else:
                 compacted = df.coalesce(target_files_per_partition)
@@ -4037,9 +3838,7 @@ class DeltaTable:
             for col, sval in key:
                 df = df.withColumn(col, _partition_literal(sval, ptypes[col]))
             n_out = max(1, round(target_files * len(group) / max(1, n_live)))
-            compacted = df.repartitionByRange(
-                n_out, *[F.col(c) for c in ccols]
-            ).sortWithinPartitions(*ccols)
+            compacted = _write_path.range_layout(df, n_out, sort_by=ccols)
             new_adds = self._stage(compacted, tuple(pcols))
             for a in group:
                 actions.append(
@@ -4056,6 +3855,14 @@ class DeltaTable:
         return v
 
     # --- checkpoint -------------------------------------------------------
+
+    def _stage_log_file(self, df: DataFrame, rel: str) -> None:
+        """Write the one-partition ``df`` as the log file ``rel`` (staged,
+        then moved into place)."""
+        tmp = f"{self.root}/_staging/ckpt_{uuid.uuid4().hex}"
+        (f,) = _write_path.stage(self.spark, df, tmp)
+        _write_path.move_file(self.spark, f"{tmp}/{f.rel}", f"{self.root}/{rel}")
+        _write_path.delete_tree(self.spark, tmp)
 
     def checkpoint(self) -> int:
         """Write a classic single-file parquet checkpoint at the current
@@ -4091,18 +3898,9 @@ class DeltaTable:
             for r in rows
         ]
         ckpt_df = self.spark.createDataFrame(norm_rows, schema=schema_ddl)
-        tmp = f"{self.root}/_staging/ckpt_{uuid.uuid4().hex}"
-        ckpt_df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        fs = self._fs()
-        part = None
-        for status in fs.listStatus(self._path(tmp)):
-            if status.getPath().getName().endswith(".parquet"):
-                part = status.getPath()
-                break
-        dest = self._path(f"{self.root}/{_LOG}/{v:020d}.checkpoint.parquet")
-        if part is None or not fs.rename(part, dest):
-            raise IOError(f"checkpoint move failed for version {v}")
-        fs.delete(self._path(tmp), True)
+        self._stage_log_file(
+            ckpt_df.coalesce(1), f"{_LOG}/{v:020d}.checkpoint.parquet"
+        )
         self._write_text(
             f"{self.root}/{_LOG}/{_LAST_CHECKPOINT}",
             json.dumps({"version": v, "size": len(norm_rows)}),
@@ -4181,7 +3979,6 @@ class DeltaTable:
                     f"v2Checkpoint upgrade lost 20 races at {self.root}"
                 )
         v = state["version"]
-        fs = self._fs()
         adds = list(state["adds"].values())
         sidecar_actions: list[dict] = []
         if adds:
@@ -4191,26 +3988,21 @@ class DeltaTable:
             )
             n_side = max(1, min(int(sidecar_files), len(adds)))
             tmp = f"{self.root}/_staging/ckpt_v2_{uuid.uuid4().hex}"
-            side_df.repartition(n_side).write.mode("overwrite").parquet(tmp)
-            fs.mkdirs(self._path(f"{self.root}/{_LOG}/{_SIDECAR_DIR}"))
-            for status in fs.listStatus(self._path(tmp)):
-                p = status.getPath()
-                if not p.getName().endswith(".parquet"):
-                    continue
+            for f in _write_path.stage(self.spark, side_df.repartition(n_side), tmp):
                 rel = f"{uuid.uuid4().hex}.parquet"
-                dest = self._path(f"{self.root}/{_LOG}/{_SIDECAR_DIR}/{rel}")
-                if not fs.rename(p, dest):
-                    raise IOError(f"sidecar move failed for version {v}")
-                st = fs.getFileStatus(dest)
+                _write_path.move_file(
+                    self.spark, f"{tmp}/{f.rel}",
+                    f"{self.root}/{_LOG}/{_SIDECAR_DIR}/{rel}",
+                )
                 sidecar_actions.append(
                     {
                         "path": rel,  # spec: relative to _delta_log/_sidecars/
-                        "sizeInBytes": st.getLen(),
-                        "modificationTime": st.getModificationTime(),
+                        "sizeInBytes": f.size,
+                        "modificationTime": f.mtime,
                         "tags": None,
                     }
                 )
-            fs.delete(self._path(tmp), True)
+            _write_path.delete_tree(self.spark, tmp)
         top_schema = (
             f"txn {_CKPT_TXN_T}, add {_CKPT_ADD_T}, remove {_CKPT_REMOVE_T}, "
             f"metaData {_CKPT_META_T}, protocol {_CKPT_PROTO_T}, "
@@ -4239,19 +4031,10 @@ class DeltaTable:
         ]
         top_rows += [{**blank, "sidecar": s} for s in sidecar_actions]
         top_df = self.spark.createDataFrame(top_rows, schema=top_schema)
-        tmp = f"{self.root}/_staging/ckpt_v2_top_{uuid.uuid4().hex}"
-        top_df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = None
-        for status in fs.listStatus(self._path(tmp)):
-            if status.getPath().getName().endswith(".parquet"):
-                part = status.getPath()
-                break
-        dest = self._path(
-            f"{self.root}/{_LOG}/{v:020d}.checkpoint.{uuid.uuid4().hex}.parquet"
+        self._stage_log_file(
+            top_df.coalesce(1),
+            f"{_LOG}/{v:020d}.checkpoint.{uuid.uuid4().hex}.parquet",
         )
-        if part is None or not fs.rename(part, dest):
-            raise IOError(f"v2 checkpoint move failed for version {v}")
-        fs.delete(self._path(tmp), True)
         self._write_text(
             f"{self.root}/{_LOG}/{_LAST_CHECKPOINT}",
             json.dumps({"version": v, "size": len(top_rows) + len(adds)}),
@@ -4390,36 +4173,21 @@ def convert_parquet_to_delta(
     t = DeltaTable(spark, root)
     if t.exists():
         raise DeltaCommitConflict(f"already a Delta table: {root}")
-    fs = t._fs()
-    files = []
-    it = fs.listFiles(t._path(root), True)
-    root_uri = t._path(root).toUri().getPath()
-    while it.hasNext():
-        status = it.next()
-        p = status.getPath()
-        rel = p.toUri().getPath()[len(root_uri):].lstrip("/")
-        if rel.startswith((_LOG, "_staging")) or not rel.endswith(".parquet"):
-            continue
-        files.append((rel, status.getLen(), status.getModificationTime()))
-    adds = []
-    for rel, size, mtime in files:
-        pv = {
-            seg.split("=", 1)[0]: _unquote_path(seg.split("=", 1)[1])
-            for seg in rel.split("/")[:-1]
-            if "=" in seg
-        }
-        pv = {k: (None if v == "__HIVE_DEFAULT_PARTITION__" else v) for k, v in pv.items()}
-        adds.append(
-            {
-                "path": _quote_path(rel),
-                "partitionValues": {c: pv.get(c) for c in partition_by},
-                "size": size,
-                "modificationTime": mtime,
-                "dataChange": True,
-            }
-        )
+    files = [
+        f
+        for f in _write_path.list_files(spark, root)
+        if not f.rel.startswith((_LOG, "_staging"))
+    ]
     if collect_stats:
-        t._attach_stats(adds, set(partition_by))
+        _write_path.file_stats(
+            spark, root, files,
+            StructType([f for f in schema.fields if f.name not in partition_by]),
+            types=_SIMPLE_TYPES, nulls=True,
+        )
+    adds = []
+    for f in files:
+        pv = _partition_values(f.partition)
+        adds.append(t._add_action(f, {c: pv.get(c) for c in partition_by}))
     meta = {
         "id": str(uuid.uuid4()),
         "format": {"provider": "parquet", "options": {}},

@@ -1,14 +1,13 @@
 """Parquet-FOOTER-derived per-file statistics (min/max/nullCount/
-numRecords, plus the txlog value dictionary) — the metadata-only
-replacement for the per-commit full re-read the txlog/delta/iceberg
-``_attach_stats``/``_stage_data`` passes used to run (OPTIMIZATION_r13
-lever #1, spark_optimization_guide §6: read the bytes once — the stats
-of a file just written are already sitting in its footer).
+numRecords, plus value dictionaries) — the metadata-only source of the
+commit stats of ``write_path.file_stats`` (the stats of a file just
+written are already sitting in its footer; no second read of the data).
 
-Exactness contract (probed empirically via tools/footer_stats_probe.py
-on parquet-mr 1.16 / pyarrow 16.1 — the writer/reader pair this engine
-ships — and pinned against the Spark aggregate in
-tests/test_footer_stats.py):
+Exactness contract, on parquet-mr 1.16 / pyarrow 16.1 (the writer/reader
+pair this engine ships). tests/test_footer_stats.py pins it: its probe
+test fails if a pyarrow or parquet-mr upgrade changes the footer
+semantics of the edge cases below, and its parity tests check these
+stats against the Spark aggregate.
 
 - ints / longs / shorts / bytes / booleans / dates / strings: footer
   min/max are EXACT. parquet-mr does NOT truncate footer string stats
@@ -16,9 +15,11 @@ tests/test_footer_stats.py):
   (= Python str order: UTF-8 byte order is code-point order).
 - float/double: parquet-mr computes stats with Java ordering — NaN
   sorts above +Inf and poisons max exactly like Spark's F.max; -0.0
-  sorts below +0.0. Probed: NaN / ±Inf / -0.0 / all-NaN columns all
-  byte-match the Spark aggregate. The cross-row-group merge below
-  replicates the same total order.
+  sorts below +0.0, where Spark's F.min/F.max order the two zeros as
+  equal (the first seen wins), so a zero bound may differ from the
+  Spark aggregate in sign, never in value (pruning compares -0.0 ==
+  0.0). NaN / ±Inf / all-NaN columns match the Spark aggregate. The
+  cross-row-group merge below replicates the footer's total order.
 - timestamp_ntz (the corpus' working type): INT64 micros, EXACT.
 - timestamp (ltz): Spark's default ``outputTimestampType`` is INT96,
   which carries NO footer stats → those columns fall back to the Spark
@@ -27,19 +28,21 @@ tests/test_footer_stats.py):
   the raw physical value (INT32/INT64 unscaled int, or big-endian
   two's-complement FIXED_LEN_BYTE_ARRAY / BYTE_ARRAY bytes).
 - all-null columns: has_min_max=False + full null_count → no min/max,
-  matching the Spark aggregate's NULL min/max.
+  matching the Spark aggregate's NULL min/max. A requested column the
+  file does not have at all reads back all-null and is reported so.
 
 Any file/column that violates an assumption (missing stats with live
 rows, missing null counts, unknown physical type) lands in the
-``untrusted`` set and the caller re-runs the old Spark aggregate FOR
-THOSE COLUMNS ONLY — correctness never rides on the fast path.
+``untrusted`` set and the caller re-runs the Spark aggregate FOR THOSE
+COLUMNS ONLY — correctness never rides on the fast path.
 
 Scale shape: per-file stats derivation is O(footer) local work — the
 same work production table formats do inline in their write tasks. Up
-to ``_DRIVER_MAX_FILES`` adds it runs as a driver loop (the commit path
-already walks the same files one-by-one to rename them); past that it
+to ``_DRIVER_MAX_FILES`` adds it runs as a driver loop; past that it
 ships the path list through ``spark.sparkContext.parallelize`` so each
 executor parses its own files' footers — no full-table scan either way.
+Both need the files at the same local path on the driver and every
+executor; ``write_path._footers_readable`` is that gate.
 """
 
 from __future__ import annotations
@@ -49,18 +52,12 @@ import decimal
 import math
 from typing import Iterable
 
+from projectdatalake_spark.sources.atomic import strip_file_scheme
+
 _DRIVER_MAX_FILES = 32
 
 # dictionary cap shared with txlog's equality-skipping metadata
 _DICT_CAP = 64
-
-
-def _strip_scheme(p: str) -> str:
-    if p.startswith("file:"):
-        p = p[5:]
-        while p.startswith("//"):
-            p = p[1:]
-    return p
 
 
 def _decode_decimal(raw, scale: int):
@@ -75,7 +72,7 @@ def _decode_decimal(raw, scale: int):
 
 def _float_key(x):
     """Total order matching Java/parquet-mr float comparison: NaN above
-    everything, -0.0 below +0.0 (what Spark's F.min/F.max use too)."""
+    everything, -0.0 below +0.0."""
     return (math.isnan(x), x, math.copysign(1.0, x))
 
 
@@ -89,48 +86,6 @@ def _norm_ts(v):
 
 class _Untrusted(Exception):
     pass
-
-
-def spark_type_name(arrow_type) -> str | None:
-    """Arrow type → Spark ``dataType.typeName()`` for the type classes
-    the stats passes filter on (None = not a stats-eligible primitive).
-    Used by callers to rebuild their old read-back-schema column filters
-    from the file footer alone."""
-    import pyarrow as pa
-
-    t = arrow_type
-    if pa.types.is_int8(t):
-        return "byte"
-    if pa.types.is_int16(t):
-        return "short"
-    if pa.types.is_int32(t):
-        return "integer"
-    if pa.types.is_int64(t):
-        return "long"
-    if pa.types.is_float32(t):
-        return "float"
-    if pa.types.is_float64(t):
-        return "double"
-    if pa.types.is_boolean(t):
-        return "boolean"
-    if pa.types.is_string(t) or pa.types.is_large_string(t):
-        return "string"
-    if pa.types.is_date(t):
-        return "date"
-    if pa.types.is_timestamp(t):
-        # tz-less micros is Spark timestamp_ntz; INT96/adjusted-to-UTC
-        # read back as timestamp (ltz)
-        return "timestamp_ntz" if t.tz is None else "timestamp"
-    if pa.types.is_decimal(t):
-        return "decimal"
-    return None
-
-
-def arrow_schema_of(path: str):
-    """Arrow schema of one parquet file (footer only)."""
-    import pyarrow.parquet as pq
-
-    return pq.ParquetFile(_strip_scheme(path)).schema_arrow
 
 
 def _one_file_stats(
@@ -176,13 +131,15 @@ def _one_file_stats(
     # the old read-back aggregate produced (df.schema order = file order)
     names = list(arrow_schema.names) if want_cols is None else list(want_cols)
     for name in names:
-        if name not in col_idx:
-            continue  # nested/absent: caller never asks, but stay safe
-        fld = arrow_schema.field(name) if name in arrow_schema.names else None
-        if fld is None:
+        if name not in arrow_schema.names:
+            # the file lacks the column: it reads back all-null
+            if with_nulls:
+                out["nulls"][name] = md.num_rows
+            continue
+        if name not in col_idx:  # nested: no single leaf carries stats
             out["untrusted"].append(name)
             continue
-        t = fld.type
+        t = arrow_schema.field(name).type
         is_dec = pa.types.is_decimal(t)
         trusted_type = (
             pa.types.is_integer(t)
@@ -253,7 +210,7 @@ def _stats_worker(paths, want_cols, dict_cols, with_nulls):
     """Executor-side loop for the distributed branch (one partition of
     file paths → one stats dict per path)."""
     return [
-        (p, _one_file_stats(_strip_scheme(p), want_cols, dict_cols, with_nulls))
+        (p, _one_file_stats(p, want_cols, dict_cols, with_nulls))
         for p in paths
     ]
 
@@ -270,7 +227,7 @@ def footer_file_stats(
     over the path list for large ones (each task opens only its own
     files' footers — never the data, except the requested dict columns).
     Returns {stripped_path: stats-dict} (see _one_file_stats)."""
-    paths = [_strip_scheme(p) for p in paths]
+    paths = [strip_file_scheme(p) for p in paths]
     dict_cols = tuple(dict_cols)
     if len(paths) <= _DRIVER_MAX_FILES or spark is None:
         return {

@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructField, StructType
 
 from projectdatalake_spark.sources import atomic as _atomic
+from projectdatalake_spark.sources import write_path as _write_path
 from projectdatalake_spark.sources.avro_codec import read_container, write_container
 
 _SPARK_TO_ICEBERG = {
@@ -2440,119 +2441,6 @@ class IcebergTable:
             except Exception:
                 pass
 
-    def _stage_data(
-        self,
-        df: DataFrame,
-        pcols: tuple[str, ...],
-        bound_types: dict[str, str] | None = None,
-    ):
-        """Write parquet under data/ (hive layout for partitioned writes),
-        returning (abs_path, size, partition_strings, record_count,
-        bounds) per file — counts, layout, AND per-file column min/max in
-        ONE staged write + ONE grouped stats pass (never a per-file
-        job). ``bound_types`` maps column → iceberg type for the columns
-        whose bounds the manifest should carry."""
-        stage_id = uuid.uuid4().hex
-        stage_dir = f"{self.root}/data/{stage_id}"
-        writer = df.write.mode("overwrite")
-        if pcols:
-            writer = writer.partitionBy(*pcols)
-        writer.parquet(stage_dir)
-        if _atomic.is_local_path(self.root):
-            # local fast path (r13): the Hadoop iterator costs one py4j
-            # roundtrip per staged file (guide §5 — driver time)
-            files = [
-                (p, size)
-                for p, size, _m in _atomic.list_local_files(
-                    _atomic.strip_file_scheme(stage_dir)
-                )
-            ]
-        else:
-            fs = self._fs()
-            files = []
-            it = fs.listFiles(self._path(stage_dir), True)
-            while it.hasNext():
-                status = it.next()
-                p = status.getPath()
-                if p.getName().endswith(".parquet"):
-                    files.append((p.toUri().getPath(), status.getLen()))
-        counts: dict = {}
-        bounds_by_file: dict[str, dict] = {}
-        bcols = [
-            c for c in (bound_types or {}) if c not in pcols and c in df.columns
-        ]
-        if files:
-            # record counts + per-file bounds from the parquet FOOTERS of
-            # the files just staged — no second read of the data (guide
-            # §6; OPTIMIZATION_r13 lever #1). Per-type bitwise exactness
-            # is probed and pinned in sources/footer_stats.py +
-            # tests/test_footer_stats.py; columns the footer cannot
-            # reproduce exactly (INT96 ltz timestamps) fall back to the
-            # original Spark aggregate RESTRICTED to those columns.
-            from . import footer_stats as _fs
-
-            add_paths = [p for p, _sz in files]
-            per_file = _fs.footer_file_stats(
-                self.spark, add_paths, want_cols=bcols
-            )
-            untrusted: list[str] = []
-            for st in per_file.values():
-                untrusted += [c for c in st["untrusted"] if c not in untrusted]
-            fb_bounds: dict[str, dict] = {}
-            if untrusted:
-                aggs = [F.count(F.lit(1)).alias("__n")]
-                for c in untrusted:
-                    aggs.append(F.min(c).alias(f"min__{c}"))
-                    aggs.append(F.max(c).alias(f"max__{c}"))
-                # read the stage DIRECTORY, not N explicit paths: an
-                # explicit path list is validated path-by-path on the
-                # driver (~60 ms each — 5+ s for an 80-file hive write),
-                # while the directory is one recursive listing; the stage
-                # dir contains exactly the files just written
-                rows = (
-                    self.spark.read.option("basePath", stage_dir)
-                    .parquet(stage_dir)
-                    .withColumn("__file", F.input_file_name())
-                    .groupBy("__file")
-                    .agg(*aggs)
-                    .collect()
-                )
-                for r in rows:
-                    d = r.asDict()
-                    # decode the input_file_name URI: partition values
-                    # with spaces arrive percent-encoded and would never
-                    # match the raw listing paths (bounds lost)
-                    key = _atomic.uri_to_path(d["__file"])
-                    fb_bounds[key] = {
-                        c: (d[f"min__{c}"], d[f"max__{c}"]) for c in untrusted
-                    }
-            for path in add_paths:
-                st = per_file.get(path)
-                if st is None:
-                    continue
-                counts[path] = st["nrec"]
-                fb = fb_bounds.get(path, {})
-                bounds_by_file[path] = {
-                    c: (
-                        fb.get(c, (None, None))
-                        if c in st["untrusted"]
-                        else (st["min"].get(c), st["max"].get(c))
-                    )
-                    for c in bcols
-                }
-        out = []
-        for path, size in files:
-            rel = path[len(self._path(stage_dir).toUri().getPath()):].lstrip("/")
-            parts = {
-                seg.split("=", 1)[0]: seg.split("=", 1)[1]
-                for seg in rel.split("/")[:-1]
-                if "=" in seg
-            }
-            out.append(
-                (path, size, parts, counts.get(path, 0), bounds_by_file.get(path, {}))
-            )
-        return out
-
     def _with_field_ids(
         self, df: DataFrame, meta: dict, extra_fields: dict | None = None
     ) -> DataFrame:
@@ -3350,31 +3238,17 @@ class IcebergTable:
         else:
             df = self.snapshot()
         sort_cols = self._default_sort_cols(meta)
-        if zorder_by:
-            # multi-dimensional clustering at rewrite time — Iceberg's
-            # actual shape too (RewriteDataFiles zOrder is a rewrite-call
-            # strategy, not table metadata, unlike set_sort_order)
-            from projectdatalake_spark.functions.clustering import (
-                attach_hilbert_column,
-                zorder_column,
-            )
-
-            n_out = target_files or self.spark.sparkContext.defaultParallelism
-            if curve == "hilbert":
-                staged = attach_hilbert_column(df, tuple(zorder_by), "__z")
-            elif curve == "z":
-                staged = df.withColumn("__z", zorder_column(df, tuple(zorder_by)))
-            else:
-                raise ValueError(f"unknown clustering curve: {curve!r}")
-            df = (
-                staged.repartitionByRange(n_out, "__z")
-                .sortWithinPartitions("__z")
-                .drop("__z")
-            )
-        elif sort_cols:
-            n_out = target_files or self.spark.sparkContext.defaultParallelism
-            df = df.repartitionByRange(n_out, *sort_cols).sortWithinPartitions(
-                *sort_cols
+        if zorder_by or sort_cols:
+            # zorder_by: multi-dimensional clustering at rewrite time —
+            # Iceberg's actual shape too (RewriteDataFiles zOrder is a
+            # rewrite-call strategy, not table metadata, unlike
+            # set_sort_order)
+            df = _write_path.range_layout(
+                df,
+                target_files or self.spark.sparkContext.defaultParallelism,
+                zorder_by=zorder_by,
+                sort_by=() if zorder_by else sort_cols,
+                curve=curve,
             )
         files = self._prepare_files(df, meta, extra_fields=extra_fields)
         return self.append_files(
@@ -3621,45 +3495,15 @@ class IcebergTable:
             .join(F.broadcast(live_df), on="file_path", how="left_semi")
             .distinct()
         )
-        stage = f"{self.root}/data/{uuid.uuid4().hex}-rewritten-deletes"
-        (
+        # spec: position deletes sorted by (file_path, pos)
+        new_files, n_after = self._write_delete_files(
             pairs.repartition(max(1, int(target_files)))
-            # spec: position deletes sorted by (file_path, pos)
-            .sortWithinPartitions("file_path", "pos")
-            .write.mode("overwrite")
-            .parquet(stage)
+            .sortWithinPartitions("file_path", "pos"),
+            "rewritten-deletes",
+            1,  # POSITION_DELETES
         )
-        fs = self._fs()
-        del_files = []
-        it = fs.listFiles(self._path(stage), True)
-        while it.hasNext():
-            status = it.next()
-            p = status.getPath()
-            if p.getName().endswith(".parquet"):
-                del_files.append((p.toUri().getPath(), status.getLen()))
-        counts = {
-            _atomic.uri_to_path(r["__file"]): r["count"]
-            for r in self.spark.read.parquet(*[f for f, _ in del_files])
-            .withColumn("__file", F.input_file_name())
-            .groupBy("__file")
-            .count()
-            .collect()
-        }
-        n_after = sum(counts.values())
         sid = uuid.uuid4().int % (1 << 62)
         del_spec = self._unpartitioned_spec(meta)
-        new_files = [
-            {
-                "content": 1,  # POSITION_DELETES
-                "file_path": path,
-                "file_format": "PARQUET",
-                "partition": {},
-                "record_count": counts.get(path, 0),
-                "file_size_in_bytes": size,
-            }
-            for path, size in del_files
-            if counts.get(path, 0) > 0
-        ]
         new_manifest_row = None
         if new_files:
             manifest_path, manifest_len = self._write_delete_manifest(
@@ -3679,8 +3523,6 @@ class IcebergTable:
                 "deleted_rows_count": 0,
                 "partitions": None,
             }
-        else:
-            fs.delete(self._path(stage), True)
         base_sid = meta.get("current-snapshot-id")
         replaced = {e["data_file"]["file_path"] for e in pos_entries}
         # single-attempt commit: the rewritten pair set was computed
@@ -3968,25 +3810,35 @@ class IcebergTable:
                     p["pname"],
                     _transform_expr(p["transform"], p["source"], p["src_type"]),
                 )
-        staged = self._stage_data(df, pcols, bound_types)
+        staged = _write_path.write_files(
+            self.spark,
+            df,
+            f"{self.root}/data/{uuid.uuid4().hex}",
+            partition_by=pcols,
+            names=bound_types,
+        )
         files = []
-        for path, size, parts, count, bounds in staged:
+        for f in staged:
             lower, upper = [], []
-            for c, (mn, mx) in bounds.items():
-                lo_b = _encode_bound(mn, bound_types[c])
-                hi_b = _encode_bound(mx, bound_types[c])
+            for c, itype in bound_types.items():
+                if c not in f.stats:
+                    continue
+                mn, mx, _nulls = f.stats[c]
+                lo_b = _encode_bound(mn, itype)
+                hi_b = _encode_bound(mx, itype)
                 if lo_b is not None:
                     lower.append({"key": fid_of[c], "value": lo_b})
                 if hi_b is not None:
                     upper.append({"key": fid_of[c], "value": hi_b})
             files.append(
                 {
-                    "path": path,
-                    "size": size,
+                    "path": f.path,
+                    "size": f.size,
                     "partition": {
-                        c: self._typed_part(parts.get(c), t) for c, t in part_fields
+                        c: self._typed_part(f.partition.get(c), t)
+                        for c, t in part_fields
                     },
-                    "record_count": count,
+                    "record_count": f.nrec,
                     "lower_bounds": lower or None,
                     "upper_bounds": upper or None,
                 }
@@ -4638,29 +4490,13 @@ class IcebergTable:
         if pairs is None:
             return None
         # spec: position deletes sorted by (file_path, pos) for merge reads
-        stage = f"{self.root}/data/{uuid.uuid4().hex}-deletes"
-        pairs.repartition(1).sortWithinPartitions("file_path", "pos").write.mode(
-            "overwrite"
-        ).parquet(stage)
-        fs = self._fs()
-        del_files = []
-        it = fs.listFiles(self._path(stage), True)
-        while it.hasNext():
-            status = it.next()
-            p = status.getPath()
-            if p.getName().endswith(".parquet"):
-                del_files.append((p.toUri().getPath(), status.getLen()))
-        counts = {
-            _atomic.uri_to_path(r["__file"]): r["count"]
-            for r in self.spark.read.parquet(*[f for f, _ in del_files])
-            .withColumn("__file", F.input_file_name())
-            .groupBy("__file")
-            .count()
-            .collect()
-        }
-        n_deleted = sum(counts.values())
+        # spec: position deletes sorted by (file_path, pos) for merge reads
+        del_files, n_deleted = self._write_delete_files(
+            pairs.repartition(1).sortWithinPartitions("file_path", "pos"),
+            "deletes",
+            1,  # POSITION_DELETES
+        )
         if n_deleted == 0:
-            fs.delete(self._path(stage), True)
             return None
         # the pair file spans every partition → global delete, written
         # under the unpartitioned spec (empty tuple) per the Iceberg spec
@@ -4669,24 +4505,11 @@ class IcebergTable:
             meta,
             del_spec,
             [],
-            files=[
-                {
-                    "content": 1,  # POSITION_DELETES
-                    "file_path": path,
-                    "file_format": "PARQUET",
-                    "partition": {},
-                    "record_count": counts.get(path, 0),
-                    "file_size_in_bytes": size,
-                }
-                for path, size in del_files
-                if counts.get(path, 0) > 0
-            ],
+            files=del_files,
             n_deleted=n_deleted,
             summary={
                 "operation": "delete",
-                "added-position-delete-files": str(
-                    sum(1 for p, _ in del_files if counts.get(p, 0) > 0)
-                ),
+                "added-position-delete-files": str(len(del_files)),
                 "added-position-deletes": str(n_deleted),
             },
         )
@@ -4910,45 +4733,41 @@ class IcebergTable:
                 for c in cols
             ]
         ).distinct()
-        stage = f"{self.root}/data/{uuid.uuid4().hex}-eqdel"
-        distinct.repartition(1).write.mode("overwrite").parquet(stage)
-        fs = self._fs()
-        del_files = []
-        it = fs.listFiles(self._path(stage), True)
-        while it.hasNext():
-            status = it.next()
-            p = status.getPath()
-            if p.getName().endswith(".parquet"):
-                del_files.append((p.toUri().getPath(), status.getLen()))
-        counts = {
-            _atomic.uri_to_path(r["__file"]): r["count"]
-            for r in self.spark.read.parquet(*[f for f, _ in del_files])
-            .withColumn("__file", F.input_file_name())
-            .groupBy("__file")
-            .count()
-            .collect()
-        }
-        n_keys = sum(counts.values())
-        if n_keys == 0:
-            fs.delete(self._path(stage), True)
-            return [], eq_ids, 0
-        return (
-            [
-                {
-                    "content": 2,  # EQUALITY_DELETES
-                    "file_path": path,
-                    "file_format": "PARQUET",
-                    "partition": {},
-                    "record_count": counts.get(path, 0),
-                    "file_size_in_bytes": size,
-                    "equality_ids": eq_ids,
-                }
-                for path, size in del_files
-                if counts.get(path, 0) > 0
-            ],
-            eq_ids,
-            n_keys,
+        files, n_keys = self._write_delete_files(
+            distinct.repartition(1), "eqdel",
+            2,  # EQUALITY_DELETES
+            equality_ids=eq_ids,
         )
+        return files, eq_ids, n_keys
+
+    def _write_delete_files(
+        self, df: DataFrame, suffix: str, content: int, **extra
+    ) -> tuple[list[dict], int]:
+        """Write delete rows as parquet under ``data/<uuid>-<suffix>`` and
+        return (non-empty delete file entries of ``content`` type, total
+        rows); record counts come from the footers. When nothing was
+        written the staged directory is removed."""
+        stage = f"{self.root}/data/{uuid.uuid4().hex}-{suffix}"
+        files = [
+            f
+            for f in _write_path.write_files(self.spark, df, stage, names=())
+            if f.nrec > 0
+        ]
+        if not files:
+            _write_path.delete_tree(self.spark, stage)
+        entries = [
+            {
+                "content": content,
+                "file_path": f.path,
+                "file_format": "PARQUET",
+                "partition": {},
+                "record_count": f.nrec,
+                "file_size_in_bytes": f.size,
+                **extra,
+            }
+            for f in files
+        ]
+        return entries, sum(f.nrec for f in files)
 
     def merge_upsert(self, updates: DataFrame, keys: list[str]) -> int:
         """MERGE (upsert) as ONE Iceberg v2 snapshot: a global equality

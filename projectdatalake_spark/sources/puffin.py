@@ -304,7 +304,9 @@ def column_theta_sketches(df, cols: list[str], k: int) -> dict:
     import pandas as pd
     from pyspark.sql import Window, functions as F
 
-    cols = list(cols)
+    # a repeated name would select a duplicate pandas label (a frame, not
+    # a series) and collapse in the result map: one sketch per name
+    cols = list(dict.fromkeys(cols))
     if not cols:
         return {}
 

@@ -43,6 +43,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from projectdatalake_spark.sources import atomic as _atomic
+from projectdatalake_spark.sources import write_path as _write_path
+from projectdatalake_spark.sources.write_path import _BLOOM_M, _BLOOM_SEEDS
 
 _LOG_DIR = "_txlog"
 _STAGING = "_staging"
@@ -237,12 +239,9 @@ def _widens_to(frm: str, to: str) -> bool:
     return False
 
 
-# Bloom sizing: 8192 bits / 2 hash functions → FPR ≈ (1-e^(-2n/8192))²,
-# ~2% at n=500 distinct values per file, ~15% at n=2000 — the equality-
-# skipping regime the 64-entry dictionary can't reach. 1 KiB per (file,
-# column) in the log; checkpointing folds it.
-_BLOOM_M = 8192
-_BLOOM_SEEDS = (0xB100, 0xB101)
+# columns whose per-file value dictionaries (≤64 values) feed equality
+# skipping
+_DICT_TYPES = ("string", "integer", "long", "short", "byte", "boolean")
 
 
 def _bloom_may_match(add: dict, probes: dict[str, list[int]]) -> bool:
@@ -1286,19 +1285,17 @@ class TxTable:
         partition_by: tuple[str, ...],
         cluster: dict | None = None,
     ) -> list[dict]:
-        """Write ``df`` under _staging/{uuid} and move the parquet files into
-        the table root (hive layout preserved). Returns add-actions; nothing
-        is visible to snapshot readers until the commit publishes.
+        """Write ``df`` through the shared staged write path into the table
+        root (hive layout preserved) and return add-actions carrying
+        per-file min/max stats, value dictionaries and opt-in bloom
+        filters (what ``snapshot(where=...)`` prunes on). Nothing is
+        visible to snapshot readers until the commit publishes.
 
-        ``cluster`` composes the stats-clustered sink: a range shuffle on
-        the cluster key (``repartitionByRange`` — disjoint key intervals
-        per task) + an in-partition sort + ``maxRecordsPerFile``. Because
-        rows leave each task in key order, the record-count file splits
-        inherit tight DISJOINT min/max intervals, which is exactly what
-        ``_attach_stats`` logs and ``snapshot(where=...)`` prunes on —
-        write-side skipping to match the read side."""
-        stage_id = uuid.uuid4().hex
-        stage_dir = f"{self.root}/{_STAGING}/{stage_id}"
+        ``cluster`` composes the stats-clustered sink: a range layout on
+        the cluster key plus ``maxRecordsPerFile``. Because rows leave
+        each task in key order, the record-count file splits inherit
+        tight DISJOINT min/max intervals — write-side skipping to match
+        the read side."""
         # hidden partitioning: derive transform columns at write time; the
         # caller's frame never carries them (the Iceberg contract)
         part_names = []
@@ -1311,219 +1308,42 @@ class TxTable:
         if cluster:
             ccols = [c for c in cluster.get("by", ()) if c in df.columns]
             if ccols:
-                df = df.repartitionByRange(
-                    int(cluster.get("files", 48)), *ccols
-                ).sortWithinPartitions(*ccols)
-        writer = df.write.mode("overwrite")
-        if cluster and cluster.get("max_rows"):
-            writer = writer.option("maxRecordsPerFile", int(cluster["max_rows"]))
-        if part_names:
-            writer = writer.partitionBy(*part_names)
-        writer.parquet(stage_dir)
-        adds: list[dict] = []
-        if _atomic.is_local_path(self.root):
-            # local fast path (r13): the Hadoop loop below costs one py4j
-            # roundtrip per file for listing and three more per rename —
-            # pure driver time on every commit (guide §5: the driver
-            # should do almost no work; cProfile in OPTIMIZATION_r13.md)
-            stage_uri = _atomic.strip_file_scheme(stage_dir)
-            root_uri = _atomic.strip_file_scheme(self.root)
-            for p, size, _mtime in _atomic.list_local_files(stage_uri):
-                rel = p[len(stage_uri):].lstrip("/")
-                partition = {
-                    seg.split("=", 1)[0]: seg.split("=", 1)[1]
-                    for seg in rel.split("/")[:-1]
-                    if "=" in seg
-                }
-                _atomic.move_local_file(p, f"{root_uri}/{rel}")
-                adds.append({"path": rel, "partition": partition, "size": size})
-            _atomic.delete_local_tree(stage_uri)
-        else:
-            fs = self._fs()
-            stage_path = self._path(stage_dir)
-            it = fs.listFiles(stage_path, True)
-            staged = []
-            while it.hasNext():
-                status = it.next()
-                p = status.getPath()
-                if p.getName().endswith(".parquet"):
-                    staged.append((p, status.getLen()))
-            stage_uri = stage_path.toUri().getPath()
-            for p, size in staged:
-                rel = p.toUri().getPath()[len(stage_uri) :].lstrip("/")
-                partition = {
-                    seg.split("=", 1)[0]: seg.split("=", 1)[1]
-                    for seg in rel.split("/")[:-1]
-                    if "=" in seg
-                }
-                dest = self._path(f"{self.root}/{rel}")
-                fs.mkdirs(dest.getParent())
-                if not fs.rename(p, dest):
-                    raise IOError(f"failed to move staged file {p} -> {dest}")
-                adds.append({"path": rel, "partition": partition, "size": size})
-            fs.delete(stage_path, True)
-        self._attach_stats(adds)
-        return adds
-
-    def _attach_stats(self, adds: list[dict]) -> None:
-        """Per-file min/max column stats, value dictionaries and opt-in
-        bloom filters for the files just written. Derived from the
-        parquet FOOTERS (plus one pyarrow columnar read per dictionary
-        column) instead of a full Spark re-read of the data — the stats
-        are already sitting in the bytes just written (guide §6;
-        OPTIMIZATION_r13 lever #1). Per-type bitwise exactness is probed
-        and pinned in sources/footer_stats.py + tests/test_footer_stats
-        .py; any column the footer cannot reproduce exactly (INT96 ltz
-        timestamps, unexpected missing stats) and every bloom column
-        (Spark-xxhash64 parity) still runs through the original Spark
-        aggregate, RESTRICTED to those columns. Feeds
-        snapshot(where=...) data skipping."""
-        if not adds:
-            return
-        from . import footer_stats as _fs
-
-        add_paths = [
-            _atomic.strip_file_scheme(self._data_path(a)) for a in adds
-        ]
-        schema = _fs.arrow_schema_of(add_paths[0])
-        pcols = set().union(*(a["partition"].keys() for a in adds))
-        # same filter the old read-back-schema walk applied: non-partition
-        # primitives minus binary/array/map/struct
-        cols, dict_cols = [], []
-        dict_types = {"string", "integer", "long", "short", "byte", "boolean"}
-        for fld in schema:
-            tn = _fs.spark_type_name(fld.type)
-            if fld.name in pcols or tn is None:
-                continue
-            cols.append(fld.name)
-            if tn in dict_types:
-                dict_cols.append(fld.name)
-        if not cols:
-            return
-        bloom_cols = [c for c in self._bloom_by() if c in set(cols)]
-        per_file = _fs.footer_file_stats(
-            self.spark, add_paths, want_cols=cols, dict_cols=dict_cols
-        )
-        untrusted: list[str] = []
-        for st in per_file.values():
-            untrusted += [c for c in st["untrusted"] if c not in untrusted]
-        spark_by_path, spark_dicts, spark_blooms, _spark_nrec = (
-            self._attach_stats_spark(adds, untrusted, [], bloom_cols)
-            if untrusted or bloom_cols
-            else ({}, {}, {}, {})
-        )
-        for a, p in zip(adds, add_paths):
-            st = per_file.get(p)
-            if st is None or st["nrec"] == 0:
-                continue  # empty file: the old read-back attached nothing
-            a["numRecords"] = st["nrec"]
-            stats = {}
-            for c in cols:
-                if c in st["untrusted"]:
-                    sv = (spark_by_path.get(p) or {}).get(c)
-                    if sv:
-                        stats[c] = sv
-                    continue
-                mn = _stats_value(st["min"].get(c))
-                mx = _stats_value(st["max"].get(c))
-                if mn is not None or mx is not None:
-                    stats[c] = {"min": mn, "max": mx}
-            if stats:
-                a["stats"] = stats
-            dicts = {}
-            for c in dict_cols:
-                vals = st["dict"].get(c)
-                if vals is not None and 0 < len(vals) <= 64:
-                    dicts[c] = [_stats_value(v) for v in vals]
-            if dicts:
-                a["dict"] = dicts
-            blooms = spark_blooms.get(p)
-            if blooms:
-                a["bloom"] = blooms
-
-    def _attach_stats_spark(
-        self,
-        adds: list[dict],
-        cols: list[str],
-        dict_cols: list[str],
-        bloom_cols: list[str],
-    ) -> tuple[dict, dict, dict, dict]:
-        """The original ONE-Spark-pass grouped stats aggregate, now the
-        RESTRICTED fallback: runs only over the columns the footer path
-        could not serve (plus bloom columns, whose bit positions need
-        the same Spark xxhash64 expression the reader probes with).
-        Returns (stats, dicts, blooms, numRecords), each keyed by
-        stripped absolute file path."""
-        from pyspark.sql import functions as F
-
-        paths = [f"{self.root}/{a['path']}" for a in adds]
-        df = self.spark.read.option("basePath", self.root).parquet(*paths)
-        present = set(df.columns)
-        cols = [c for c in cols if c in present]
-        dict_cols = [c for c in dict_cols if c in present]
-        bloom_cols = [c for c in bloom_cols if c in present]
-        aggs = [F.count(F.lit(1)).alias("__nrec")]
-        for c in cols:
-            aggs.append(F.min(c).alias(f"min__{c}"))
-            aggs.append(F.max(c).alias(f"max__{c}"))
-        for c in dict_cols:
-            aggs.append(
-                F.slice(F.sort_array(F.collect_set(c)), 1, 65).alias(f"dict__{c}")
-            )
-        for c in bloom_cols:
-            for i, seed in enumerate(_BLOOM_SEEDS):
-                aggs.append(
-                    F.collect_set(
-                        F.pmod(F.xxhash64(F.col(c), F.lit(seed)), F.lit(_BLOOM_M))
-                    ).alias(f"bloom{i}__{c}")
+                df = _write_path.range_layout(
+                    df, int(cluster.get("files", 48)), sort_by=ccols
                 )
-        rows = (
-            df.withColumn("__file", F.input_file_name())
-            .groupBy("__file")
-            .agg(*aggs)
-            .collect()
+        files = _write_path.write_files(
+            self.spark,
+            df,
+            f"{self.root}/{_STAGING}/{uuid.uuid4().hex}",
+            dest_root=self.root,
+            partition_by=part_names,
+            max_records=(cluster or {}).get("max_rows"),
+            dict_types=_DICT_TYPES,
+            bloom_cols=self._bloom_by(),
         )
-        # Key by FULL PATH, never basename: Spark's partitioned writes
-        # reuse part-file basenames ACROSS partition directories
-        # (seg=0/part-00000-… and seg=1/part-00000-… coexist), and a
-        # basename-keyed map silently attributes one file's stats to all
-        # of its same-named siblings — which makes min/max skipping drop
-        # the wrong files (data loss, not conservatism).
-        # decode the input_file_name URI side ONLY (percent-encoded
-        # partition values would never match raw listing paths — stats
-        # silently lost for e.g. 'priority=4-NOT SPECIFIED' dirs); the
-        # filesystem side gets a plain scheme strip, never a decode (a
-        # raw path can legitimately contain %XX from hive escaping)
-        by_path: dict[str, dict] = {}
-        dicts_by_path: dict[str, dict] = {}
-        blooms_by_path: dict[str, dict] = {}
-        nrec_by_path: dict[str, int] = {}
-        for r in rows:
-            d = r.asDict()
-            fpath = _atomic.uri_to_path(d.pop("__file"))
-            nrec_by_path[fpath] = int(d.pop("__nrec"))
-            stats = {}
-            for c in cols:
-                mn, mx = _stats_value(d[f"min__{c}"]), _stats_value(d[f"max__{c}"])
-                if mn is not None or mx is not None:
-                    stats[c] = {"min": mn, "max": mx}
-            by_path[fpath] = stats
-            dicts = {}
-            for c in dict_cols:
-                vals = d.get(f"dict__{c}")
-                if vals is not None and 0 < len(vals) <= 64:
-                    dicts[c] = [_stats_value(v) for v in vals]
-            dicts_by_path[fpath] = dicts
-            blooms = {}
-            for c in bloom_cols:
-                bits = 0
-                for i in range(len(_BLOOM_SEEDS)):
-                    for p in d.get(f"bloom{i}__{c}") or []:
-                        bits |= 1 << p
-                if bits:
-                    blooms[c] = f"{bits:x}"
-            blooms_by_path[fpath] = blooms
-        return by_path, dicts_by_path, blooms_by_path, nrec_by_path
+        adds = []
+        for f in files:
+            a = {"path": f.rel, "partition": f.partition, "size": f.size}
+            # an empty file, or one without stats columns, records nothing
+            if f.nrec and f.stats:
+                a["numRecords"] = f.nrec
+                stats = {}
+                for c, (mn, mx, _nulls) in f.stats.items():
+                    mn, mx = _stats_value(mn), _stats_value(mx)
+                    if mn is not None or mx is not None:
+                        stats[c] = {"min": mn, "max": mx}
+                if stats:
+                    a["stats"] = stats
+                dicts = {
+                    c: [_stats_value(v) for v in vals]
+                    for c, vals in f.dicts.items()
+                }
+                if dicts:
+                    a["dict"] = dicts
+                if f.bloom:
+                    a["bloom"] = f.bloom
+            adds.append(a)
+        return adds
 
     def _publish(
         self, op: str, adds: list[dict], removes: list[str], precondition=None,
@@ -2310,13 +2130,14 @@ class TxTable:
         n_rows), or None when there are no hits (staging cleaned up)."""
         stage_id = uuid.uuid4().hex
         stage_dir = f"{self.root}/{_STAGING}/{stage_id}"
-        hits.coalesce(1).write.mode("overwrite").parquet(stage_dir)
-        fs = self._fs()
-        staged = self.spark.read.parquet(stage_dir)
-        n = staged.count()
+        staged_files = _write_path.write_files(
+            self.spark, hits.coalesce(1), stage_dir, names=()
+        )
+        n = sum(f.nrec for f in staged_files)
         if n == 0:
-            fs.delete(self._path(stage_dir), True)
+            _write_path.delete_tree(self.spark, stage_dir)
             return None
+        staged = self.spark.read.parquet(stage_dir)
         touched_abs = [r.file_path for r in staged.select("file_path").distinct().collect()]
 
         # map by FULL path, never basename — partitioned writes reuse part
@@ -2333,20 +2154,13 @@ class TxTable:
             by_abs[_atomic.uri_to_path(p)] for p in touched_abs
         )
         dv_rel = f"{_DV_DIR}/{stage_id}.parquet"
-        it = fs.listFiles(self._path(stage_dir), True)
-        moved = False
-        while it.hasNext():
-            p = it.next().getPath()
-            if p.getName().endswith(".parquet"):
-                dest = self._path(f"{self.root}/{dv_rel}")
-                fs.mkdirs(dest.getParent())
-                if not fs.rename(p, dest):
-                    raise IOError(f"failed to move deletion vector to {dest}")
-                moved = True
-                break
-        fs.delete(self._path(stage_dir), True)
-        if not moved:
-            raise IOError("deletion vector staging produced no parquet file")
+        # coalesce(1): the hits are exactly one file
+        _write_path.move_file(
+            self.spark,
+            f"{stage_dir}/{staged_files[0].rel}",
+            f"{self.root}/{dv_rel}",
+        )
+        _write_path.delete_tree(self.spark, stage_dir)
         return dv_rel, touched_rel, n
 
     def update_where_dv(self, condition: str, set_exprs: dict[str, str]) -> int | None:
@@ -2481,14 +2295,6 @@ class TxTable:
         return dest
 
     # --- maintenance ------------------------------------------------------
-
-    def _zorder_column(self, df: DataFrame, cols: tuple[str, ...], bits: int = 8):
-        """Interleaved-bit Z-value over ``cols`` for multi-dimensional
-        clustering — shared across the table formats, see
-        functions/clustering.py for the design notes."""
-        from projectdatalake_spark.functions.clustering import zorder_column
-
-        return zorder_column(df, cols, bits)
 
     def write_stats(self, columns: list[str], k: int = 4096) -> int:
         """Column NDV statistics as a METADATA-ONLY commit (``set_stats``)
@@ -2727,8 +2533,9 @@ class TxTable:
                 base_rows, "__fp string, __base long"
             )
             df = tag(self.spark.read.parquet(*[p for p, _b in base_rows]))
-            # the same URI→raw pairing _attach_stats proved: decode the
-            # _metadata URI side only, never the listing side
+            # the same URI→raw pairing the write path's stats keying
+            # uses: decode the _metadata URI side only, never the listing
+            # side
             df = df.withColumn(
                 "__fp",
                 F.url_decode(
@@ -3037,33 +2844,11 @@ class TxTable:
             # rewrite, or the compacted files would resurrect masked rows
             if dvs:
                 scoped = self._apply_dv_mask(scoped, dvs)
-        if zorder_by:
-            if sort_by:
-                raise ValueError("pass sort_by OR zorder_by, not both")
-            if curve == "hilbert":
-                # contiguous space-filling curve: tighter per-file
-                # hyper-rectangles than Z at the same bit budget (2-D)
-                from projectdatalake_spark.functions.clustering import (
-                    attach_hilbert_column,
-                )
-
-                staged = attach_hilbert_column(scoped, tuple(zorder_by), "__z")
-            elif curve == "z":
-                z = self._zorder_column(scoped, tuple(zorder_by))
-                staged = scoped.withColumn("__z", z)
-            else:
-                raise ValueError(f"unknown clustering curve: {curve!r}")
-            compacted = (
-                staged.repartitionByRange(target_files, "__z")
-                .sortWithinPartitions("__z")
-                .drop("__z")
+        if zorder_by or sort_by:
+            compacted = _write_path.range_layout(
+                scoped, target_files, zorder_by=zorder_by, sort_by=sort_by,
+                curve=curve,
             )
-        elif sort_by:
-            # range partitioning gives each output task a disjoint slice of
-            # the sort key; every emitted file's [min, max] is narrow
-            compacted = scoped.repartitionByRange(
-                target_files, *sort_by
-            ).sortWithinPartitions(*sort_by)
         elif pcols:
             # one task (= one output file) per hive partition (transform
             # specs repartition on the DERIVED expression, not the name)

@@ -8,9 +8,10 @@ on ADVERSARIAL data written through the real table writers: NaN / ±Inf /
 dates, decimals (INT32/FLBA physicals), shorts, booleans, empty tables,
 and the distributed (>32 files) branch.
 
-Ground truth is the ORIGINAL Spark grouped aggregate, still in-tree as
-the restricted fallback (_attach_stats_spark) — each test recomputes it
-over every column and asserts the attached stats are IDENTICAL.
+Ground truth is the Spark grouped aggregate, in-tree as the write
+path's restricted fallback (write_path.spark_file_stats) — each test
+recomputes it over every column and asserts the attached stats are
+IDENTICAL.
 """
 
 from __future__ import annotations
@@ -23,6 +24,7 @@ import pytest
 from pyspark.sql import Row, functions as F, types as T
 
 from projectdatalake_spark.sources import footer_stats as FS
+from projectdatalake_spark.sources import write_path as WP
 
 
 ADVERSARIAL_ROWS = [
@@ -99,21 +101,29 @@ def test_txlog_footer_stats_match_spark_agg(spark, tmp_path):
         f.name for f in df.schema.fields
         if f.name in cols and f.dataType.typeName() in dict_types
     ]
-    by_path, dicts, _blooms, nrec = t._attach_stats_spark(
-        adds, cols, dict_cols, []
-    )
     from projectdatalake_spark.sources import atomic as _atomic
+    from projectdatalake_spark.sources.txlog import _stats_value
 
+    agg = WP.spark_file_stats(
+        spark, t.root, [t._data_path(a) for a in adds],
+        [f for f in df.schema.fields if f.name in cols], dict_cols,
+    )
     for a in adds:
         p = _atomic.strip_file_scheme(t._data_path(a))
-        assert a.get("numRecords") == nrec[p]
-        want_stats = {c: v for c, v in by_path[p].items()}
+        assert a.get("numRecords") == agg[p]["nrec"]
+        want_stats = {}
+        for c, (mn, mx, _nulls) in agg[p]["stats"].items():
+            mn, mx = _stats_value(mn), _stats_value(mx)
+            if mn is not None or mx is not None:
+                want_stats[c] = {"min": mn, "max": mx}
         got_stats = a.get("stats") or {}
         assert _normf(got_stats) == _normf(want_stats), (
             p, got_stats, want_stats,
         )
         want_dicts = {
-            c: v for c, v in dicts[p].items()
+            c: [_stats_value(v) for v in vals]
+            for c, vals in agg[p]["dicts"].items()
+            if 0 < len(vals) <= 64
         }
         got_dicts = a.get("dict") or {}
         assert got_dicts == want_dicts, (p, got_dicts, want_dicts)
@@ -150,9 +160,12 @@ def test_delta_footer_stats_match_spark_agg(spark, tmp_path):
         f.name for f in df.schema.fields
         if f.name != "part" and f.dataType.typeName() in _SIMPLE_TYPES
     ]
-    by_path, _blooms = t._attach_stats_spark(adds, cols, [])
     from projectdatalake_spark.sources import atomic as _atomic
 
+    agg = WP.spark_file_stats(
+        spark, t.root, [t._abs_data_path(a["path"]) for a in adds],
+        [f for f in df.schema.fields if f.name in cols], nulls=True,
+    )
     for a in adds:
         p = _atomic.strip_file_scheme(t._abs_data_path(a["path"]))
         want = {
@@ -164,7 +177,7 @@ def test_delta_footer_stats_match_spark_agg(spark, tmp_path):
         got = json.loads(a["stats"])
         want["numRecords"] = got["numRecords"]  # checked via row count below
         for c in cols:
-            mn, mx, nulls = by_path[p][c]
+            mn, mx, nulls = agg[p]["stats"][c]
             if mn is not None:
                 want["minValues"][c] = _stats_scalar(mn)
             if mx is not None:
@@ -313,3 +326,111 @@ def test_decimal_raw_decode():
         (-12345).to_bytes(3, "big", signed=True), 3
     ) == decimal.Decimal("-12.345")
     assert FS._decode_decimal(None, 2) is None
+
+
+PROBE_ROWS = [
+    # id, dbl, flt, zero, s, long_s, tsn, ts, dec, bigdec
+    (1, 1.5, 2.5, 0.0, "alpha", "a", datetime.datetime(2020, 1, 2, 3, 4, 5, 123456),
+     datetime.datetime(2020, 1, 2), decimal.Decimal("123.45"),
+     decimal.Decimal("12345678901234567890.123")),
+    (2, float("nan"), float("nan"), -0.0, "b" * 63, "z" * 3000,
+     datetime.datetime(1969, 12, 31, 23, 59, 59), None, decimal.Decimal("-99999.99"),
+     decimal.Decimal("-99999999999999999999.999")),
+    (3, float("inf"), float("-inf"), 0.0, "é≠☃ unicode", None, None,
+     datetime.datetime(2030, 12, 31), None, None),
+    (4, -0.0, 0.0, -0.0, None, "m" * 65, datetime.datetime(2030, 12, 31),
+     None, decimal.Decimal("0.00"), decimal.Decimal("0.001")),
+    (5, None, -1.25, 0.0, "c" * 64, "b", datetime.datetime(2021, 6, 7), None,
+     decimal.Decimal("99999.99"), None),
+]
+PROBE_SCHEMA = (
+    "id int, dbl double, flt float, zero double, s string, long_s string, "
+    "tsn timestamp_ntz, ts timestamp, dec decimal(7,2), bigdec decimal(23,3)"
+)
+# footer semantics of the probed edge cases on the shipped writer/reader
+# pair (parquet-mr 1.16 / pyarrow 16.1): NaN is the max and -0.0 the min
+# of a double column, ±Inf are ordinary bounds, strings are never
+# truncated, decimals decode exactly from INT32 and FIXED_LEN_BYTE_ARRAY,
+# timestamp_ntz is exact and the INT96 ltz timestamp carries no stats
+PROBE_EXPECTED = {
+    "id": ("1", "5", 0),
+    "dbl": ("-0.0", "nan", 1),
+    "flt": ("-inf", "nan", 0),
+    "zero": ("-0.0", "0.0", 0),
+    "s": ("'alpha'", "'é≠☃ unicode'", 1),
+    "long_s": ("'a'", repr("z" * 3000), 1),
+    "tsn": (
+        "datetime.datetime(1969, 12, 31, 23, 59, 59)",
+        "datetime.datetime(2030, 12, 31, 0, 0)",
+        1,
+    ),
+    "dec": ("Decimal('-99999.99')", "Decimal('99999.99')", 1),
+    "bigdec": (
+        "Decimal('-99999999999999999999.999')",
+        "Decimal('12345678901234567890.123')",
+        2,
+    ),
+}
+
+
+def test_footer_semantics_probe(spark, tmp_path):
+    """Pins what a parquet footer says about the probed edge cases —
+    fails if a pyarrow or parquet-mr upgrade changes footer min/max/null
+    semantics (the premise of the footer stats path) — and checks the
+    footer-derived stats against the Spark aggregate."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    out = str(tmp_path / "probe")
+    df = spark.createDataFrame(PROBE_ROWS, PROBE_SCHEMA).coalesce(1)
+    df.write.parquet(out)
+    (path,) = [
+        os.path.join(out, f) for f in os.listdir(out) if f.endswith(".parquet")
+    ]
+    cols = df.columns
+    st = FS._one_file_stats(path, cols, (), True)
+    assert st["nrec"] == len(PROBE_ROWS)
+    assert st["untrusted"] == ["ts"]
+    got = {
+        c: (repr(st["min"][c]), repr(st["max"][c]), st["nulls"][c])
+        for c in cols
+        if c != "ts"
+    }
+    assert got == PROBE_EXPECTED
+    md = pq.ParquetFile(path).metadata
+    ts_idx = [md.row_group(0).column(i).path_in_schema for i in range(len(cols))]
+    ts_stats = md.row_group(0).column(ts_idx.index("ts")).statistics
+    assert ts_stats is None or not ts_stats.has_min_max
+
+    # the Spark aggregate agrees in value; Spark orders -0.0 and 0.0 as
+    # equal (the first seen wins), so only the sign of a zero bound may
+    # differ from the footer's
+    def same(a, b):
+        if isinstance(a, float) and math.isnan(a):
+            return isinstance(b, float) and math.isnan(b)
+        return a == b
+
+    agg = WP.spark_file_stats(spark, out, [path], df.schema.fields, nulls=True)
+    (want,) = agg.values()
+    assert want["nrec"] == st["nrec"]
+    for c in got:
+        mn, mx, nulls = want["stats"][c]
+        assert same(mn, st["min"][c]) and same(mx, st["max"][c]), c
+        assert nulls == st["nulls"][c], c
+
+    # all-NaN and all-null columns: no bounds for all-null; NaN bounds
+    # for all-NaN, as Spark's min/max
+    edge = str(tmp_path / "edge")
+    spark.createDataFrame(
+        [(float("nan"), None), (float("nan"), None)], "allnan double, allnull double"
+    ).coalesce(1).write.parquet(edge)
+    (epath,) = [
+        os.path.join(edge, f) for f in os.listdir(edge) if f.endswith(".parquet")
+    ]
+    est = FS._one_file_stats(epath, ["allnan", "allnull"], (), True)
+    assert est["untrusted"] == []
+    assert (repr(est["min"].get("allnan")), repr(est["max"].get("allnan"))) == (
+        "nan", "nan",
+    )
+    assert "allnull" not in est["min"] and est["nulls"] == {"allnan": 0, "allnull": 2}

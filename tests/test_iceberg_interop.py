@@ -14,6 +14,7 @@ from __future__ import annotations
 import json
 import os
 import tempfile
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -24,6 +25,7 @@ from projectdatalake_spark.sources.iceberg_interop import (
     IcebergProtocolError,
     IcebergTable,
 )
+from projectdatalake_spark.sources.write_path import write_files
 
 
 def _df(spark, lo=0, hi=100, seg_mod=3):
@@ -1447,7 +1449,7 @@ def test_remove_orphan_files(spark, root):
     t = IcebergTable.create(spark, root, _df(spark, 0, 50))
     t.append(_df(spark, 100, 120))
     # simulate a crashed writer: staged data, no commit
-    t._stage_data(_df(spark, 900, 950), (), None)
+    write_files(spark, _df(spark, 900, 950), f"{root}/data/{uuid.uuid4().hex}")
     n_before = sum(len(fs) for _, _, fs in os.walk(os.path.join(root, "data")))
     # young orphans survive the default horizon
     assert t.remove_orphan_files() == 0

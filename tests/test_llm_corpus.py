@@ -81,3 +81,25 @@ def test_partitioning_invariance(spark):
     shuffled = llm_corpus.curate(docs.repartition(7, "lang"))
     assert base.exceptAll(shuffled).count() == 0
     assert shuffled.exceptAll(base).count() == 0
+
+
+def test_release_cache_drops_frames_of_a_stopped_context(spark):
+    """After a session restart in the same process the cached prefix
+    belongs to a stopped SparkContext, whose unpersist raises; it is
+    dropped instead. A live frame is still unpersisted. (The stopped
+    context is a stand-in: the shared session stays up.)"""
+
+    class _StoppedFrame:
+        class sparkSession:
+            class sparkContext:
+                _jsc = None  # what SparkContext.stop() leaves behind
+
+        def unpersist(self):
+            raise AssertionError("unpersist on a stopped SparkContext")
+
+    live = spark.range(3).persist()
+    live.count()
+    llm_corpus._live_cache.extend([live, _StoppedFrame()])
+    llm_corpus.release_cache()
+    assert llm_corpus._live_cache == []
+    assert not live.is_cached

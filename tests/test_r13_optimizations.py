@@ -10,6 +10,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Window, functions as F
 
 
@@ -66,3 +67,53 @@ def test_theil_sen_bucketed_selection_matches_global_window(spark, sf_dir):
 
     got = QUERIES["ts_theil_sen_trend"](spark, sf_dir).collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
+
+
+def test_duplicate_sketch_columns_collapse(spark, tmp_path):
+    """A repeated column name builds one sketch, the same as naming the
+    column once (txlog write_stats over ["a", "a"] vs ["a"])."""
+    from projectdatalake_spark.sources.txlog import TxTable
+
+    df = spark.range(0, 500).select(
+        (F.col("id") % 37).alias("a"), F.col("id").alias("b")
+    )
+    once = TxTable.create(spark, str(tmp_path / "once"), df)
+    twice = TxTable.create(spark, str(tmp_path / "twice"), df)
+    once.write_stats(["a"])
+    twice.write_stats(["a", "a"])
+    got, want = twice._state()["stats"], once._state()["stats"]
+    assert list(got) == ["a"]
+    assert got["a"]["sketch"] == want["a"]["sketch"]
+    assert got["a"]["ndv"] == want["a"]["ndv"] == 37
+
+
+@pytest.mark.parametrize("n_days", [0, 1, 2])
+def test_theil_sen_degenerate_day_counts(spark, sf_dir, tmp_path, n_days):
+    """No slope pairs (0 or 1 distinct day) select no median: an empty
+    frame with the declared schema, like the oracle's rank filter. Two
+    days give one pair, whose slope is the median."""
+    from projectdatalake_spark.queries import QUERIES
+
+    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    days = [
+        r[0]
+        for r in o.select(F.to_date("o_orderdate").alias("d"))
+        .distinct()
+        .orderBy("d")
+        .limit(n_days)
+        .collect()
+    ]
+    sub = o.filter(F.to_date("o_orderdate").isin(days)) if days else o.limit(0)
+    sub.write.parquet(str(tmp_path / "orders.parquet"))
+    got = QUERIES["ts_theil_sen_trend"](spark, str(tmp_path))
+    assert got.dtypes == [("n_pairs", "bigint"), ("sen_slope", "double")]
+    rows = got.collect()
+    if n_days < 2:
+        assert rows == []
+    else:
+        counts = dict(
+            sub.groupBy(F.to_date("o_orderdate")).count().collect()
+        )
+        c1, c2 = (counts[d] for d in days)
+        slope = (c2 - c1) / (days[1] - days[0]).days
+        assert [tuple(r) for r in rows] == [(1, round(slope, 9))]
